@@ -1046,7 +1046,13 @@ def connected_components(
     labels would be silently wrong — one true component split into
     several — so hitting ``max_iter`` with changes still flowing raises
     ``RuntimeError`` instead of returning truncated labels.
+    ``checkpoint_every < 1`` raises ``ValueError`` (a zero-round block
+    would compare the labels with themselves and report convergence).
     """
+    if checkpoint_every < 1:
+        raise ValueError(
+            f"checkpoint_every must be >= 1, got {checkpoint_every}"
+        )
     fast = _cc_local_or_none(edges, nodes, id_a, id_b, node_col, max_iter)
     if fast is not None:
         return fast

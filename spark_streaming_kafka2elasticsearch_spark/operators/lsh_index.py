@@ -27,9 +27,8 @@ NOT batch-of-arrival:
   old files (new parquet files land beside old ones);
 * **delete** computes the touched parts FROM THE IDS ALONE (the same
   xxhash64 is evaluated on the deletion set — no index scan), rewrites
-  only those partitions via dynamic partition overwrite, and rmtree's
-  any partition the rewrite emptied (the stale-file trap:
-  ivf_persisted_delete's surgery).  Touched work is
+  only those partitions and removes any partition the rewrite emptied
+  (sources/writer.delete_from_partitions).  Touched work is
   ``min(|Δ|, n_parts)/n_parts`` of the index, never the index.
 
 ``n_parts`` defaults to 16 for the local test scale; a 100 TB corpus
@@ -56,7 +55,6 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 from typing import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -244,17 +242,15 @@ def minhash_lsh_delete(
     The touched parts are computed from the DELETION IDS alone (the
     same ``pmod(xxhash64(id), n_parts)`` the writer used — no index
     scan), so the read is partition-pruned to ``min(|Δ|, n_parts)``
-    directories; each is rewritten without the deleted rows via
-    dynamic partition overwrite, and a partition the rewrite EMPTIED
-    is rmtree'd explicitly (dynamic overwrite writes nothing for an
-    absent partition, so its stale files would keep serving ghosts —
-    the ivf_persisted_delete trap).  Unknown ids are harmless: their
-    part is rewritten without change.  Post-delete derivations equal
-    a rebuild over the survivors — band rows are independent per
-    document, so removing a doc's rows is exactly what the rebuild
-    never computes."""
+    directories; each is rewritten without the deleted rows and a
+    partition the rewrite EMPTIED is removed
+    (sources/writer.delete_from_partitions).  Unknown ids are
+    harmless: their part is rewritten without change.  Post-delete
+    derivations equal a rebuild over the survivors — band rows are
+    independent per document, so removing a doc's rows is exactly
+    what the rebuild never computes."""
     from spark_streaming_kafka2elasticsearch_spark.sources.writer import (
-        overwrite_partitions,
+        delete_from_partitions,
     )
 
     meta = _read_meta(path)
@@ -273,22 +269,13 @@ def minhash_lsh_delete(
         return []
     for sub in (_SIG_DIR, _BAND_DIR):
         subdir = os.path.join(path, sub)
-        scoped = spark.read.parquet(subdir).filter(
-            F.col("part").isin(touched)
+        delete_from_partitions(
+            spark.read.parquet(subdir).filter(F.col("part").isin(touched)),
+            dele.select("doc_id"),
+            "doc_id",
+            subdir,
+            ["part"],
         )
-        remaining = scoped.join(
-            dele.select("doc_id"), "doc_id", "left_anti"
-        ).localCheckpoint(eager=True)
-        if not remaining.isEmpty():
-            overwrite_partitions(remaining, subdir, ["part"])
-        kept = {
-            int(r["part"])
-            for r in remaining.select("part").distinct().collect()
-        }
-        for p in set(touched) - kept:
-            shutil.rmtree(
-                os.path.join(subdir, f"part={p}"), ignore_errors=True
-            )
     if new_fingerprint is not None:
         meta["fingerprint"] = new_fingerprint
         _write_meta(path, meta)

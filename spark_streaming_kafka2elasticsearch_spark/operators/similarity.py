@@ -1940,19 +1940,21 @@ def _maintain_gate_state(base, n, dim, old_edges):
         o_dst = tbl.column("dst").to_numpy(zero_copy_only=False).astype(
             np.int64, casting="safe"
         )
-        o_rank = (
-            tbl.column("rank")
-            .to_numpy(zero_copy_only=False)
-            .astype(np.int32, casting="same_kind")
+        o_rank = tbl.column("rank").to_numpy(zero_copy_only=False).astype(
+            np.int64, casting="safe"
         )
     except (TypeError, ValueError):
         return None
     if len(o_src) and (
         min(o_src.min(), o_dst.min()) < 0
         or max(o_src.max(), o_dst.max()) >= (1 << 31)
+        or o_rank.min() < -(1 << 31)
+        or o_rank.max() >= (1 << 31)
     ):
-        return None
-    st["o_src"], st["o_dst"], st["o_rank"] = o_src, o_dst, o_rank
+        return None  # the kernels carry ids and ranks in 32 bits
+    st["o_src"], st["o_dst"], st["o_rank"] = o_src, o_dst, o_rank.astype(
+        np.int32
+    )
     return st
 
 
@@ -3958,13 +3960,11 @@ def ivf_persisted_delete(
     deleted id (the id→cell lookup is an inner join against the
     index — cost |index ∩ Δ|, and at 100 TB the deleted ids' cells
     are the only directories touched); those cell partitions are
-    atomically rewritten via dynamic partition overwrite with the
-    deleted rows anti-joined out, and a cell whose LAST row is deleted
-    has its directory removed explicitly (dynamic overwrite only
-    replaces partitions present in the written data — an emptied
-    partition would otherwise silently keep its old files: the
-    empty-partition trap).  Untouched cells keep their files
-    byte-identical, so concurrent serving retains partition pruning.
+    rewritten with the deleted rows anti-joined out, and a (sub)partition
+    whose LAST row is deleted is removed
+    (sources/writer.delete_from_partitions).  Untouched cells keep
+    their files byte-identical, so concurrent serving retains
+    partition pruning.
 
     By assignment determinism, ``serve(layout minus Δ)`` is
     BIT-EQUAL to a full rebuild over ``corpus \\ Δ`` — appending only
@@ -3981,11 +3981,8 @@ def ivf_persisted_delete(
     siblings and kept serving under the pre-delete fingerprint).
 
     Returns the list of touched cell ids (the compact() convention)."""
-    import os
-    import shutil
-
     from spark_streaming_kafka2elasticsearch_spark.sources.writer import (
-        overwrite_partitions,
+        delete_from_partitions,
     )
 
     ss = spark or deleted_ids.sparkSession
@@ -4003,50 +4000,13 @@ def ivf_persisted_delete(
     if not touched:
         _ivf_meta_restamp(path, new_fingerprint)
         return []
-    two_level = "batch_id" in index.columns
-    remaining = (
-        index.filter(F.col("cell").isin(touched))
-        .join(F.broadcast(dele), "neighbor_id", "left_anti")
-        # Materialize BEFORE the overwrite: the remaining-rows plan
-        # READS the cell files it is about to replace (the
-        # self-overwrite trap).
-        .localCheckpoint(eager=True)
+    delete_from_partitions(
+        index.filter(F.col("cell").isin(touched)),
+        F.broadcast(dele),
+        "neighbor_id",
+        path,
+        ["cell", "batch_id"] if "batch_id" in index.columns else ["cell"],
     )
-    # Old partition inventory, captured BEFORE the overwrite mutates
-    # the directory tree (`index` is a lazy plan over `path`).
-    if two_level:
-        old_parts = {
-            (int(r["cell"]), int(r["batch_id"]))
-            for r in index.filter(F.col("cell").isin(touched))
-            .select("cell", "batch_id")
-            .distinct()
-            .collect()
-        }
-    if not remaining.isEmpty():
-        overwrite_partitions(
-            remaining,
-            path,
-            ["cell", "batch_id"] if two_level else ["cell"],
-        )
-    # Empty-partition sweep: a (sub)partition whose last row was
-    # deleted is absent from `remaining`, so the dynamic overwrite
-    # never replaced it — remove its directory explicitly.
-    if two_level:
-        kept = {
-            (int(r["cell"]), int(r["batch_id"]))
-            for r in remaining.select("cell", "batch_id").distinct().collect()
-        }
-        for cell, bid in old_parts - kept:
-            shutil.rmtree(
-                os.path.join(path, f"cell={cell}", f"batch_id={bid}"),
-                ignore_errors=True,
-            )
-    kept_cells = {
-        int(r["cell"]) for r in remaining.select("cell").distinct().collect()
-    }
-    for cell in touched:
-        if cell not in kept_cells:
-            shutil.rmtree(os.path.join(path, f"cell={cell}"), ignore_errors=True)
     _ivf_meta_restamp(path, new_fingerprint)
     return touched
 

@@ -90,6 +90,62 @@ def overwrite_partitions(
     writer.save(path)
 
 
+def delete_from_partitions(
+    scoped: DataFrame,
+    deleted: DataFrame,
+    key: str,
+    path: str,
+    partition_by: Sequence[str],
+) -> None:
+    """Delete rows by key from a hive-partitioned parquet table,
+    rewriting only the partitions that can hold them — the erasure
+    primitive of every partitioned index and landing zone.
+
+    ``scoped`` is the table read at ``path`` and filtered to the
+    partitions that may hold a deleted row (at 100 TB the only
+    directories read or written); ``deleted`` holds the ``key`` values
+    to drop.  The scoped rows minus the deleted ones are materialized
+    (the rewrite plan READS the files it replaces — the self-overwrite
+    trap) and landed with :func:`overwrite_partitions`.  Dynamic
+    overwrite only replaces partitions PRESENT in the written data, so
+    a partition whose last row was deleted would silently keep its old
+    files and keep serving ghosts — the empty-partition trap: every
+    partition the rewrite emptied is removed explicitly, at each level
+    of ``partition_by`` (a ``cell=3/batch_id=7`` leaf, and ``cell=3``
+    once its last leaf is gone).  Partitions outside ``scoped`` keep
+    their files byte-identical.
+
+    Idempotent: re-running it with the same ``deleted`` rewrites the
+    surviving rows unchanged, so a crash anywhere inside replays
+    cleanly.  Partition values must format as their directory names
+    (the integer ``batch_id``/``part``/``cell`` columns do)."""
+    import os
+    import shutil
+
+    def inventory(df: DataFrame) -> set[tuple]:
+        return {
+            tuple(r) for r in df.select(*partition_by).distinct().collect()
+        }
+
+    # captured BEFORE the overwrite mutates the tree `scoped` reads
+    before = inventory(scoped)
+    remaining = scoped.join(deleted, key, "left_anti").localCheckpoint(
+        eager=True
+    )
+    if not remaining.isEmpty():
+        overwrite_partitions(remaining, path, partition_by)
+    after = inventory(remaining)
+    for depth in range(len(partition_by), 0, -1):
+        kept = {p[:depth] for p in after}
+        for part in {p[:depth] for p in before} - kept:
+            shutil.rmtree(
+                os.path.join(
+                    path, *(f"{c}={v}" for c, v in zip(partition_by, part))
+                ),
+                ignore_errors=True,
+            )
+
+
 def compact_partitions(
     spark,
     path: str,

@@ -13,6 +13,7 @@ window path (``:441-458``): watermark → window+key groupBy → count.
 
 from __future__ import annotations
 
+from collections.abc import Callable
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -81,24 +82,223 @@ def windowed_orders_stats_stream(
     )
 
 
-def _parse_doc_stream(spark: SparkSession, source: Any) -> DataFrame:
-    """Shared front-door parse for the document ingestion gates: the
-    source's ``value`` JSON column → (doc_id, lang, text).  ONE schema
-    definition for all four gates (exact-dup, near-dup, tokenize,
-    DSIR) so a document-envelope change cannot drift between them."""
-    from pyspark.sql import types as T
+_DOC_DDL = "doc_id BIGINT, lang STRING, text STRING"
+_VEC_DDL = "vec_id BIGINT, embedding ARRAY<DOUBLE>"
 
-    doc_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("lang", T.StringType()),
-            T.StructField("text", T.StringType()),
-        ]
-    )
+
+def _parse_json_stream(spark: SparkSession, source: Any, ddl: str) -> DataFrame:
+    """The source's ``value`` JSON column → the columns of ``ddl``.
+    ONE parse for every job that reads JSON envelopes, and one schema
+    per envelope kind (``_DOC_DDL`` for ``{doc_id, lang, text}``,
+    ``_VEC_DDL`` for ``{vec_id, embedding}``), so an envelope change
+    cannot drift between the gates that read it."""
     return (
         source.load_stream(spark)
-        .select(F.from_json(F.col("value").cast("string"), doc_schema).alias("d"))
+        .select(F.from_json(F.col("value").cast("string"), ddl).alias("d"))
         .select("d.*")
+    )
+
+
+def _run_per_batch(
+    frame: DataFrame, fn: Callable[[DataFrame, int], None], checkpoint_dir: str
+):
+    """Start ``fn(batch, batch_id)`` over every micro-batch of
+    ``frame`` — the ``foreachBatch`` shape every gate and maintenance
+    job shares: the SAME batch operator the oracle-checked query uses
+    runs on each micro-batch (streaming = batch per micro-batch, which
+    is correct because a document or vector never spans records).
+    Delivery is at-least-once: a retried micro-batch re-runs ``fn``
+    with the same ``batch_id`` (Spark's checkpoint contract), so a
+    plain parquet append may duplicate under retry — route survivors
+    through the keyed-upsert sink, or land them with
+    :func:`_land_batch`, for an effectively-once result.  Returns the
+    started StreamingQuery (the caller stops it)."""
+    return (
+        frame.writeStream.foreachBatch(fn)
+        .option("checkpointLocation", checkpoint_dir)
+        .start()
+    )
+
+
+def _land_batch(frame: DataFrame, zone_dir: str, batch_id: int) -> None:
+    """Land one micro-batch's rows under ``zone_dir/batch_id=<id>`` by
+    dynamic partition overwrite — the replay-idempotent landing: a
+    retried micro-batch (same ``batch_id``) REPLACES its own partition
+    instead of double-appending, and a crash between two landings is
+    repaired by the replay for the same reason, so at-least-once ×
+    idempotent overwrite = effectively-once.  Zones landed by the same
+    micro-batch reconcile by ``batch_id``."""
+    from spark_streaming_kafka2elasticsearch_spark.sources.writer import (
+        overwrite_partitions,
+    )
+
+    overwrite_partitions(
+        frame.withColumn("batch_id", F.lit(batch_id)), zone_dir, ["batch_id"]
+    )
+
+
+def _erase_landed(
+    landed: DataFrame, ids: DataFrame, key: str, zone_dir: str
+) -> None:
+    """Delete ``ids`` from a :func:`_land_batch` zone: only the
+    ``batch_id`` partitions holding a deleted ``key`` are rewritten,
+    and a partition this empties is removed
+    (sources/writer.delete_from_partitions).  Idempotent by keying, so
+    an erasure stream re-runs it to completion on every replay."""
+    from spark_streaming_kafka2elasticsearch_spark.sources.writer import (
+        delete_from_partitions,
+    )
+
+    touched = sorted(
+        int(r["batch_id"])
+        for r in landed.join(ids, key, "left_semi")
+        .select("batch_id")
+        .distinct()
+        .collect()
+    )
+    if touched:
+        delete_from_partitions(
+            landed.filter(F.col("batch_id").isin(touched)),
+            ids,
+            key,
+            zone_dir,
+            ["batch_id"],
+        )
+
+
+def _corpus_texts(
+    spark: SparkSession, static_corpus: DataFrame | None, corpus_dir: str
+) -> DataFrame | None:
+    """(doc_id, text) of ``static_corpus`` (documents an index was
+    BUILT over, whose text predates the stream) ∪ the stream's landed
+    ``corpus_dir`` zone — None when neither exists."""
+    import os
+
+    if not os.path.isdir(corpus_dir):
+        return static_corpus
+    landed = spark.read.parquet(corpus_dir).select("doc_id", "text")
+    return landed if static_corpus is None else static_corpus.unionByName(landed)
+
+
+def _first_seen_docs(
+    parsed: DataFrame,
+    min_tokens: int,
+    min_alpha_ratio: float,
+    value_cols: list[str],
+) -> DataFrame:
+    """Front-door leg 1, quality + exact-dup: quality gate → canonical
+    fingerprint → cross-batch first-seen dedup on the fingerprint
+    (``applyInPandasWithState``), emitting each distinct document
+    exactly once no matter how often the transport redelivers it or
+    how duplicates straddle micro-batches.  The ONE stateful stage of
+    the front door, so it runs stream-side, before the per-batch
+    gates; the fingerprint IS the downstream idempotency key."""
+    from spark_streaming_kafka2elasticsearch_spark.operators.text import (
+        document_fingerprint,
+        text_quality,
+    )
+    from spark_streaming_kafka2elasticsearch_spark.streaming.stateful import (
+        streaming_first_seen,
+    )
+
+    quality = text_quality(parsed).filter(
+        (F.col("n_tokens") >= min_tokens) & (F.col("alpha_ratio") >= min_alpha_ratio)
+    )
+    return streaming_first_seen(
+        document_fingerprint(quality), key_col="fingerprint", value_cols=value_cols
+    )
+
+
+def _near_dup_survivors(
+    batch: DataFrame,
+    corpus: DataFrame,
+    min_jaccard: float,
+    max_doc_freq: int | None,
+) -> DataFrame:
+    """Front-door leg 2, near-dup: ``batch`` minus the documents with a
+    near-dup at ``min_jaccard`` in the static at-rest ``corpus``
+    (operators/dedup.delta_corpus_jaccard_pairs — asymmetric inverted
+    index, corpus-side stop-shingle cap).  The corpus side is
+    re-derived per batch; at 100 TB its shingle postings and
+    df-statistics are a maintained table the operator joins instead
+    (the at-rest form is :func:`lsh_gate_ingest_stream`)."""
+    from spark_streaming_kafka2elasticsearch_spark.operators.dedup import (
+        delta_corpus_jaccard_pairs,
+    )
+
+    hits = (
+        delta_corpus_jaccard_pairs(
+            batch,
+            corpus,
+            id_col="doc_id",
+            block_cols=["lang"],
+            min_jaccard=min_jaccard,
+            max_doc_freq=max_doc_freq,
+        )
+        .select(F.col("delta_id").alias("doc_id"))
+        .distinct()
+    )
+    return batch.join(hits, "doc_id", "left_anti")
+
+
+def _dsir_weights(weights: DataFrame, n_buckets: int) -> DataFrame:
+    """Front-door leg 3 setup: the fitted DSIR weight table
+    (operators/text.dsir_fit_weights), MATERIALIZED once — a lazy fit
+    relation would re-run the corpus-sized fit inside every
+    micro-batch — and checked to hold exactly ``n_buckets`` rows.  The
+    scorer re-derives buckets from ``n_buckets``, and because the
+    fit's spine is dense, a mismatched table would join cleanly and
+    score every document against the WRONG model rows with no error;
+    the count check turns that silent corruption into a ValueError.
+    At 100 TB the table is a maintained artifact refit on a curation
+    cadence, not per batch."""
+    weights = weights.localCheckpoint(eager=True)
+    n_w = weights.count()
+    if n_w != n_buckets:
+        raise ValueError(
+            f"weight table has {n_w} rows but n_buckets={n_buckets}; "
+            "the fit and the scorer must agree on the bucket count"
+        )
+    return weights
+
+
+def _dsir_kept(
+    batch: DataFrame, weights: DataFrame, n_buckets: int, min_logratio: float
+) -> DataFrame:
+    """Front-door leg 3, DSIR relevance: the scored rows (doc_id,
+    n_feats, dsir_logratio) of ``batch`` with ``dsir_logratio ≥
+    min_logratio``.  FEATURELESS documents (empty/whitespace-only
+    text) have no defined score and never pass, regardless of
+    ``min_logratio`` — by contract: a doc with zero tokens fails any
+    downstream quality bar anyway, and a fabricated score would poison
+    the selection pool."""
+    from spark_streaming_kafka2elasticsearch_spark.operators.text import (
+        dsir_score_with_weights,
+    )
+
+    return dsir_score_with_weights(
+        batch, weights, id_col="doc_id", n_buckets=n_buckets
+    ).filter(F.col("dsir_logratio") >= min_logratio)
+
+
+def _semantic_clean_ids(
+    vecs: DataFrame, evals: DataFrame, threshold: float
+) -> DataFrame:
+    """Front-door leg 4, semantic decontamination: the ``vec_id`` of
+    every (vec_id, embedding) row contaminated by NO vector of the
+    static ``evals`` matrix at ``threshold`` cosine
+    (operators/similarity.semantic_contamination_flags).  Per-vector,
+    against a static matrix, so no cross-batch state is needed; the
+    matrix is materialized at gate setup and broadcast-small by the
+    benchmark-suite contract."""
+    from spark_streaming_kafka2elasticsearch_spark.operators.similarity import (
+        semantic_contamination_flags,
+    )
+
+    return (
+        semantic_contamination_flags(vecs, evals, threshold=threshold)
+        .filter(~F.col("is_contaminated"))
+        .select("vec_id")
     )
 
 
@@ -110,33 +310,19 @@ def documents_ingest_stream(
 ) -> DataFrame:
     """Streaming corpus ingest — the LLM-data pipeline's front door,
     composed from the SAME batch operators the oracle-checked queries
-    use (streaming = batch + state): parse document JSON → quality
-    gate → canonical fingerprint → cross-batch first-seen dedup on the
-    fingerprint (applyInPandasWithState), emitting each distinct
-    document exactly once no matter how often the transport redelivers
-    it or how duplicates straddle micro-batches.
+    use (streaming = batch + state): parse document JSON, then the
+    quality + exact-dup leg (:func:`_first_seen_docs`).
 
     Source contract: yields a ``value`` string column of JSON docs
     ``{doc_id, lang, text}`` (Kafka envelope in prod, JsonDirSource in
     tests).  Downstream: any keyed sink; the fingerprint IS the
     idempotency key.
     """
-
-    from spark_streaming_kafka2elasticsearch_spark.operators.text import (
-        document_fingerprint,
-        text_quality,
-    )
-    from spark_streaming_kafka2elasticsearch_spark.streaming.stateful import (
-        streaming_first_seen,
-    )
-
-    parsed = _parse_doc_stream(spark, source)
-    quality = text_quality(parsed).filter(
-        (F.col("n_tokens") >= min_tokens) & (F.col("alpha_ratio") >= min_alpha_ratio)
-    )
-    printed = document_fingerprint(quality)
-    return streaming_first_seen(
-        printed, key_col="fingerprint", value_cols=["doc_id", "lang", "n_tokens"]
+    return _first_seen_docs(
+        _parse_json_stream(spark, source, _DOC_DDL),
+        min_tokens,
+        min_alpha_ratio,
+        ["doc_id", "lang", "n_tokens"],
     )
 
 
@@ -150,50 +336,24 @@ def near_dup_gate_stream(
     max_doc_freq: int | None = 50,
 ):
     """Streaming NEAR-dup ingestion gate: each arriving micro-batch is
-    screened against the static at-rest ``corpus`` with the batch
-    delta-vs-corpus operator (operators/dedup.delta_corpus_jaccard_pairs
-    — asymmetric inverted index, corpus-side stop-shingle cap), and
-    only documents with NO corpus near-dup at ``min_jaccard`` are
-    appended to ``sink_dir`` as parquet.  The exact-dup gate
-    (documents_ingest_stream) suppresses redeliveries; this one
-    suppresses paraphrased/boilerplate-shifted re-crawls of content
-    the corpus already holds — the other half of a crawl front door.
-
-    Shape: ``foreachBatch`` — the engine's documented pattern for
-    reusing batch relations per micro-batch (the same pattern the
-    keyed-upsert sinks use, streaming/sinks.py).  The corpus side of
-    the screen is re-derived per batch here; at 100 TB the corpus
-    shingle postings and df-statistics are a maintained table the
-    batch operator joins instead (its docstring covers that contract
-    — the stream wiring is identical).  Parquet append in
-    foreachBatch is at-least-once under retry; route survivors
-    through the keyed-upsert sink for exactly-once delivery.
+    screened against the static at-rest ``corpus``
+    (:func:`_near_dup_survivors`) and only documents with NO corpus
+    near-dup at ``min_jaccard`` are appended to ``sink_dir`` as
+    parquet.  The exact-dup gate (documents_ingest_stream) suppresses
+    redeliveries; this one suppresses paraphrased/boilerplate-shifted
+    re-crawls of content the corpus already holds — the other half of
+    a crawl front door.  Shape and delivery: :func:`_run_per_batch`.
 
     Returns the started StreamingQuery (caller stops it).
     """
 
-    from spark_streaming_kafka2elasticsearch_spark.operators.dedup import (
-        delta_corpus_jaccard_pairs,
-    )
-
-    parsed = _parse_doc_stream(spark, source)
-
     def screen(batch: DataFrame, batch_id: int) -> None:
-        hits = delta_corpus_jaccard_pairs(
-            batch,
-            corpus,
-            id_col="doc_id",
-            block_cols=["lang"],
-            min_jaccard=min_jaccard,
-            max_doc_freq=max_doc_freq,
-        ).select(F.col("delta_id").alias("doc_id")).distinct()
-        survivors = batch.join(hits, "doc_id", "left_anti")
-        survivors.write.mode("append").parquet(sink_dir)
+        _near_dup_survivors(batch, corpus, min_jaccard, max_doc_freq).write.mode(
+            "append"
+        ).parquet(sink_dir)
 
-    return (
-        parsed.writeStream.foreachBatch(screen)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    return _run_per_batch(
+        _parse_json_stream(spark, source, _DOC_DDL), screen, checkpoint_dir
     )
 
 
@@ -219,12 +379,12 @@ def lsh_gate_ingest_stream(
     fresh documents against the index (census over index members,
     exact-Jaccard verify against matched members' text only); (3)
     documents with NO match at ``min_jaccard`` survive; (4) survivors'
-    text lands in ``index_path/corpus/`` (batch_id-partitioned dynamic
-    overwrite — the landed deduped corpus AND the verify text store
-    for later probes); (5) survivors are appended to the index.
-    Intra-batch near-dup pairs both land — the same contract as
-    near_dup_gate_stream (the screen is batch-vs-corpus; exact dups
-    within a batch are the upstream exact-dup gate's job).
+    text lands in ``index_path/corpus/`` (:func:`_land_batch` — the
+    landed deduped corpus AND the verify text store for later probes);
+    (5) survivors are appended to the index.  Intra-batch near-dup
+    pairs both land — the same contract as near_dup_gate_stream (the
+    screen is batch-vs-corpus; exact dups within a batch are the
+    upstream exact-dup gate's job).
 
     Crash-replay is idempotent WITHOUT a stamp, by write order: the
     corpus partition lands BEFORE the index append.  A crash between
@@ -238,11 +398,11 @@ def lsh_gate_ingest_stream(
     stamp.)
 
     ``static_corpus`` supplies (doc_id, text) for documents the index
-    was BUILT over (their text predates the stream's landed zone);
-    pass None when the index has no pre-stream text.  The caller
-    persists the initial index (operators/lsh_index.minhash_lsh_persist)
-    over a NON-EMPTY initial corpus before starting the stream (a
-    zero-row partitioned parquet layout has no readable schema).
+    was BUILT over (:func:`_corpus_texts`); pass None when the index
+    has no pre-stream text.  The caller persists the initial index
+    (operators/lsh_index.minhash_lsh_persist) over a NON-EMPTY initial
+    corpus before starting the stream (a zero-row partitioned parquet
+    layout has no readable schema).
 
     Returns the started StreamingQuery (caller stops it)."""
     import os
@@ -251,11 +411,7 @@ def lsh_gate_ingest_stream(
         minhash_lsh_append,
         minhash_lsh_probe,
     )
-    from spark_streaming_kafka2elasticsearch_spark.sources.writer import (
-        overwrite_partitions,
-    )
 
-    parsed = _parse_doc_stream(spark, source)
     corpus_dir = os.path.join(index_path, "corpus")
     sig_dir = os.path.join(index_path, "signatures")
 
@@ -269,15 +425,8 @@ def lsh_gate_ingest_stream(
         )
         if fresh.isEmpty():
             return
-        texts = [static_corpus] if static_corpus is not None else []
-        if os.path.isdir(corpus_dir):
-            texts.append(
-                spark.read.parquet(corpus_dir).select("doc_id", "text")
-            )
-        if texts:
-            corpus_texts = texts[0]
-            for t in texts[1:]:
-                corpus_texts = corpus_texts.unionByName(t)
+        corpus_texts = _corpus_texts(spark, static_corpus, corpus_dir)
+        if corpus_texts is not None:
             hits = (
                 minhash_lsh_probe(
                     spark,
@@ -295,17 +444,11 @@ def lsh_gate_ingest_stream(
         survivors = survivors.localCheckpoint(eager=True)
         if survivors.isEmpty():
             return
-        overwrite_partitions(
-            survivors.withColumn("batch_id", F.lit(int(batch_id))),
-            corpus_dir,
-            ["batch_id"],
-        )
+        _land_batch(survivors, corpus_dir, int(batch_id))
         minhash_lsh_append(index_path, survivors.select("doc_id", "text"))
 
-    return (
-        parsed.writeStream.foreachBatch(screen)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    return _run_per_batch(
+        _parse_json_stream(spark, source, _DOC_DDL), screen, checkpoint_dir
     )
 
 
@@ -325,15 +468,13 @@ def tokenize_ingest_stream(
     (near_dup_gate_stream): content that survives dedup lands already
     tokenized, so downstream packing/training never re-touches text.
 
-    Shape: ``foreachBatch`` over the SAME batch encode operator the
-    oracle-checked ``bpe_encode_documents`` query uses
-    (operators/text.bpe_encode_with_lexicon) — streaming = batch per
-    micro-batch, and the per-document groupBy is correct because each
-    document arrives whole in one record.  The lexicon is the
-    broadcast-small side by the vocabulary contract; at 100 TB it is a
-    maintained table rebuilt on a training cadence, not per batch.
-    Parquet append is at-least-once under retry; route through the
-    keyed-upsert sink for exactly-once.
+    The batch encode operator is the one the oracle-checked
+    ``bpe_encode_documents`` query uses
+    (operators/text.bpe_encode_with_lexicon); the per-document groupBy
+    is correct because each document arrives whole in one record.  The
+    lexicon is the broadcast-small side by the vocabulary contract; at
+    100 TB it is a maintained table rebuilt on a training cadence, not
+    per batch.  Shape and delivery: :func:`_run_per_batch`.
 
     Returns the started StreamingQuery (caller stops it).
     """
@@ -342,17 +483,13 @@ def tokenize_ingest_stream(
         bpe_encode_with_lexicon,
     )
 
-    parsed = _parse_doc_stream(spark, source)
-
     def encode(batch: DataFrame, batch_id: int) -> None:
         bpe_encode_with_lexicon(batch, lexicon).write.mode("append").parquet(
             sink_dir
         )
 
-    return (
-        parsed.writeStream.foreachBatch(encode)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    return _run_per_batch(
+        _parse_json_stream(spark, source, _DOC_DDL), encode, checkpoint_dir
     )
 
 
@@ -369,64 +506,28 @@ def dsir_gate_stream(
     crawl front door after exact-dup (documents_ingest_stream),
     near-dup (near_dup_gate_stream) and tokenize
     (tokenize_ingest_stream): each arriving micro-batch of documents
-    is importance-scored against the static fitted weight table
-    (operators/text.dsir_fit_weights — the build-once B-row artifact)
-    and only documents with ``dsir_logratio ≥ min_logratio`` land in
-    ``sink_dir``, carrying their score.
-
-    Shape: ``foreachBatch`` over the SAME batch scorer the
-    oracle-checked ``dsir_importance_weights`` query uses
-    (operators/text.dsir_score_with_weights) — streaming = batch per
-    micro-batch, correct because a document's features never span
-    records.  FEATURELESS documents (empty/whitespace-only text) have
-    no defined score and never pass the gate regardless of
-    ``min_logratio`` — by contract, not accident: a doc with zero
-    tokens fails any downstream quality bar anyway, and emitting it
-    with a fabricated score would poison the selection pool
-    (pytest-pinned).  The weight table is MATERIALIZED once at gate
-    setup (a lazy dsir_fit_weights relation would otherwise re-run the
-    corpus-sized fit inside every micro-batch) and its row count must
-    equal ``n_buckets`` — the scorer re-derives buckets from
-    ``n_buckets``, and because the fit's spine is dense, a mismatched
-    table would join cleanly and score every document against the
-    WRONG model rows with no error; the count check turns that silent
-    corruption into a ValueError.  At 100 TB the table is a maintained
-    artifact refit on a curation cadence, not per batch.  Parquet
-    append is at-least-once under retry; route through the
-    keyed-upsert sink for exactly-once.
+    is importance-scored against the static fitted weight table with
+    the SAME batch scorer the oracle-checked
+    ``dsir_importance_weights`` query uses, and only documents with
+    ``dsir_logratio ≥ min_logratio`` land in ``sink_dir``, carrying
+    their score (:func:`_dsir_kept`; the table is materialized and
+    count-checked at setup by :func:`_dsir_weights`).  Shape and
+    delivery: :func:`_run_per_batch`.
 
     Returns the started StreamingQuery (caller stops it).
     """
-
-    from spark_streaming_kafka2elasticsearch_spark.operators.text import (
-        dsir_score_with_weights,
-    )
-
-    weights = weights.localCheckpoint(eager=True)
-    n_w = weights.count()
-    if n_w != n_buckets:
-        raise ValueError(
-            f"weight table has {n_w} rows but n_buckets={n_buckets}; "
-            "the fit and the scorer must agree on the bucket count"
-        )
-
-    parsed = _parse_doc_stream(spark, source)
+    weights = _dsir_weights(weights, n_buckets)
 
     def score_and_gate(batch: DataFrame, batch_id: int) -> None:
-        scored = dsir_score_with_weights(
-            batch, weights, id_col="doc_id", n_buckets=n_buckets
-        )
         kept = batch.join(
-            scored.filter(F.col("dsir_logratio") >= min_logratio), "doc_id"
+            _dsir_kept(batch, weights, n_buckets, min_logratio), "doc_id"
         )
         kept.select(
             "doc_id", "lang", "text", "n_feats", "dsir_logratio"
         ).write.mode("append").parquet(sink_dir)
 
-    return (
-        parsed.writeStream.foreachBatch(score_and_gate)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    return _run_per_batch(
+        _parse_json_stream(spark, source, _DOC_DDL), score_and_gate, checkpoint_dir
     )
 
 
@@ -448,9 +549,8 @@ def kn_perplexity_gate_stream(
     the threshold) land in ``sink_dir``, carrying score and OOV
     count.
 
-    Shape: ``foreachBatch`` over the SAME batch scorer the
-    oracle-green ``kn_perplexity_quality_gate`` query uses —
-    streaming = batch per micro-batch (pytest-pinned), correct
+    The scorer is the one the oracle-green
+    ``kn_perplexity_quality_gate`` query uses (pytest-pinned), correct
     because a document's bigrams never span records.  OOV bigram
     instances (routine against a static model) are excluded from the
     sum and surfaced as ``n_oov``; documents with NO matched bigram
@@ -458,9 +558,8 @@ def kn_perplexity_gate_stream(
     never pass the gate — the featureless-doc contract shared with
     the DSIR gate.  The model is MATERIALIZED at gate setup (a lazy
     kn_bigram_model relation would re-run the corpus-sized fit every
-    micro-batch); at 100 TB it is refit on a curation cadence.
-    Parquet append is at-least-once under retry; route through the
-    keyed-upsert sink for exactly-once.
+    micro-batch); at 100 TB it is refit on a curation cadence.  Shape
+    and delivery: :func:`_run_per_batch`.
 
     Returns the started StreamingQuery (caller stops it).
     """
@@ -474,8 +573,6 @@ def kn_perplexity_gate_stream(
             "empty KN model — fit kn_bigram_model on a non-trivial corpus"
         )
 
-    parsed = _parse_doc_stream(spark, source)
-
     def score_and_gate(batch: DataFrame, batch_id: int) -> None:
         scored = kn_doc_scores(batch, model, id_col="doc_id")
         kept = batch.join(
@@ -485,30 +582,8 @@ def kn_perplexity_gate_stream(
             "doc_id", "lang", "text", "n_bigrams", "n_oov", "kn_nll"
         ).write.mode("append").parquet(sink_dir)
 
-    return (
-        parsed.writeStream.foreachBatch(score_and_gate)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-
-
-def _parse_vec_stream(spark: SparkSession, source: Any) -> DataFrame:
-    """Front-door parse for EMBEDDING ingestion gates: the source's
-    ``value`` JSON column → (vec_id, embedding array<double>).  The
-    vector twin of ``_parse_doc_stream`` — one schema definition so an
-    embedding-envelope change cannot drift between gates."""
-    from pyspark.sql import types as T
-
-    vec_schema = T.StructType(
-        [
-            T.StructField("vec_id", T.LongType()),
-            T.StructField("embedding", T.ArrayType(T.DoubleType())),
-        ]
-    )
-    return (
-        source.load_stream(spark)
-        .select(F.from_json(F.col("value").cast("string"), vec_schema).alias("v"))
-        .select("v.*")
+    return _run_per_batch(
+        _parse_json_stream(spark, source, _DOC_DDL), score_and_gate, checkpoint_dir
     )
 
 
@@ -525,47 +600,27 @@ def semantic_decon_gate_stream(
     family after exact-dup (documents_ingest_stream), near-dup
     (near_dup_gate_stream), tokenize (tokenize_ingest_stream) and
     DSIR relevance (dsir_gate_stream): each arriving micro-batch of
-    vectors is screened against the static benchmark/eval matrix with
-    the SAME batch operator the oracle-checked
-    ``semantic_decontamination`` query uses
-    (operators/similarity.semantic_contamination_flags), and only
-    vectors contaminated by NO eval vector at ``threshold`` cosine
-    land in ``sink_dir``.
-
-    Shape: ``foreachBatch``; streaming = batch per micro-batch,
-    correct because a vector never spans records and the screen is
-    per-vector (no cross-batch state needed — contamination is
-    against the STATIC eval matrix, not against other stream rows).
-    The eval matrix is MATERIALIZED once at gate setup (a lazy
-    relation would re-derive it inside every micro-batch) and is
-    broadcast-small by the benchmark-suite contract.  Parquet append
-    is at-least-once under retry; route through the keyed-upsert sink
-    for exactly-once.
+    ``{vec_id, embedding}`` vectors is screened against the static
+    benchmark/eval matrix with the SAME batch operator the
+    oracle-checked ``semantic_decontamination`` query uses
+    (:func:`_semantic_clean_ids`), and only vectors contaminated by NO
+    eval vector at ``threshold`` cosine land in ``sink_dir``.  The eval
+    matrix is MATERIALIZED once at gate setup (a lazy relation would
+    re-derive it inside every micro-batch).  Shape and delivery:
+    :func:`_run_per_batch`.
 
     Returns the started StreamingQuery (caller stops it).
     """
-
-    from spark_streaming_kafka2elasticsearch_spark.operators.similarity import (
-        semantic_contamination_flags,
-    )
-
     evals = evals.localCheckpoint(eager=True)
-    parsed = _parse_vec_stream(spark, source)
 
     def screen(batch: DataFrame, batch_id: int) -> None:
-        clean = (
-            semantic_contamination_flags(batch, evals, threshold=threshold)
-            .filter(~F.col("is_contaminated"))
-            .select("vec_id")
-        )
+        clean = _semantic_clean_ids(batch, evals, threshold)
         batch.join(clean, "vec_id", "left_semi").write.mode("append").parquet(
             sink_dir
         )
 
-    return (
-        parsed.writeStream.foreachBatch(screen)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    return _run_per_batch(
+        _parse_json_stream(spark, source, _VEC_DDL), screen, checkpoint_dir
     )
 
 
@@ -586,19 +641,16 @@ def ivf_index_maintenance_stream(
     batch rebuild over everything ingested so far (pinned in
     tests/test_streaming.py).
 
-    Shape: ``foreachBatch`` calling the batch operator per micro-batch
-    (streaming = batch by construction, the gate-family rule).  The
-    centroid table is collected once at setup — maintenance must NOT
-    retrain the quantizer, or appended vectors would land in different
-    cells than the base build (the codebook is versioned separately;
-    re-clustering is a rebuild, not maintenance).
+    The centroid table is collected once at setup — maintenance must
+    NOT retrain the quantizer, or appended vectors would land in
+    different cells than the base build (the codebook is versioned
+    separately; re-clustering is a rebuild, not maintenance).
 
     Replay-idempotent (ADVICE r10): each micro-batch lands in its own
     ``(cell, batch_id)`` subpartitions via dynamic partition overwrite
-    — foreachBatch is at-least-once, and a retried batch (same
-    batch_id, Spark's checkpoint contract) OVERWRITES its own
-    partitions instead of duplicating vectors into served top-k.  The
-    base layout must therefore be built with
+    (the :func:`_land_batch` story one level down), so a retried batch
+    OVERWRITES its own partitions instead of duplicating vectors into
+    served top-k.  The base layout must therefore be built with
     ``ivf_persisted_topk(..., batch_id=-1)`` (two-level layout;
     serving still prunes on the top-level cell).
 
@@ -608,17 +660,14 @@ def ivf_index_maintenance_stream(
     )
 
     cents = centroids.localCheckpoint(eager=True)
-    parsed = _parse_vec_stream(spark, source)
 
     def append(batch: DataFrame, batch_id: int) -> None:
         if batch.isEmpty():
             return
         ivf_persisted_append(batch, cents, index_path, batch_id=batch_id)
 
-    return (
-        parsed.writeStream.foreachBatch(append)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    return _run_per_batch(
+        _parse_json_stream(spark, source, _VEC_DDL), append, checkpoint_dir
     )
 
 
@@ -642,11 +691,11 @@ def knn_graph_maintenance_stream(
     relation).
 
     Layout under ``graph_path``: ``corpus/`` (the ingested vectors,
-    ``batch_id``-partitioned, dynamically overwritten) and ``edges/``
-    (the current edge list, atomically rewritten per batch — edges
-    are a DERIVED relation whose rows change on append, unlike the
-    append-only IVF cells).  Starts from EMPTY: the first batch's
-    graph is a plain :func:`knn_graph` build.
+    landed by :func:`_land_batch`) and ``edges/`` (the current edge
+    list, atomically rewritten per batch — edges are a DERIVED
+    relation whose rows change on append, unlike the append-only IVF
+    cells).  Starts from EMPTY: the first batch's graph is a plain
+    :func:`knn_graph` build.
 
     Replay idempotency is carried by the id ANTI-JOIN, not by
     partition overwrite alone: a redelivered vector id is dropped
@@ -666,12 +715,8 @@ def knn_graph_maintenance_stream(
         knn_graph,
         knn_graph_append,
     )
-    from spark_streaming_kafka2elasticsearch_spark.sources.writer import (
-        overwrite_partitions,
-    )
 
     cents = centroids.localCheckpoint(eager=True)
-    parsed = _parse_vec_stream(spark, source)
     corpus_dir = os.path.join(graph_path, "corpus")
     edges_dir = os.path.join(graph_path, "edges")
 
@@ -702,16 +747,10 @@ def knn_graph_maintenance_stream(
         # edge files it is about to replace (the self-overwrite trap).
         new_edges = new_edges.localCheckpoint(eager=True)
         new_edges.write.mode("overwrite").parquet(edges_dir)
-        overwrite_partitions(
-            delta.withColumn("batch_id", F.lit(batch_id)),
-            corpus_dir,
-            ["batch_id"],
-        )
+        _land_batch(delta, corpus_dir, batch_id)
 
-    return (
-        parsed.writeStream.foreachBatch(maintain)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    return _run_per_batch(
+        _parse_json_stream(spark, source, _VEC_DDL), maintain, checkpoint_dir
     )
 
 
@@ -763,11 +802,7 @@ def descent_graph_maintenance_stream(
         nn_descent_graph,
         nn_descent_refresh,
     )
-    from spark_streaming_kafka2elasticsearch_spark.sources.writer import (
-        overwrite_partitions,
-    )
 
-    parsed = _parse_vec_stream(spark, source)
     corpus_dir = os.path.join(graph_path, "corpus")
     edges_dir = os.path.join(graph_path, "edges")
 
@@ -802,11 +837,7 @@ def descent_graph_maintenance_stream(
                     F.max("_batch_id").alias("b")
                 ).first()["b"]
                 if applied is not None and int(applied) >= int(batch_id):
-                    overwrite_partitions(
-                        delta.withColumn("batch_id", F.lit(batch_id)),
-                        corpus_dir,
-                        ["batch_id"],
-                    )
+                    _land_batch(delta, corpus_dir, batch_id)
                     return
             old_edges = old_raw.select("src", "dst", "rank")
             full = old_corpus.union(delta.select("vec_id", "embedding"))
@@ -842,16 +873,10 @@ def descent_graph_maintenance_stream(
             .localCheckpoint(eager=True)
         )
         new_edges.write.mode("overwrite").parquet(edges_dir)
-        overwrite_partitions(
-            delta.withColumn("batch_id", F.lit(batch_id)),
-            corpus_dir,
-            ["batch_id"],
-        )
+        _land_batch(delta, corpus_dir, batch_id)
 
-    return (
-        parsed.writeStream.foreachBatch(maintain)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    return _run_per_batch(
+        _parse_json_stream(spark, source, _VEC_DDL), maintain, checkpoint_dir
     )
 
 
@@ -876,8 +901,7 @@ def descent_graph_erasure_stream(
     ``edges/`` stamped): deleted sources drop, touched sources
     re-rank against survivors, untouched rows carry verbatim — then
     ONLY the corpus partitions containing a deleted id are rewritten
-    (dynamic partition overwrite + the emptied-partition rmtree, the
-    ivf_persisted_delete surgery).
+    (:func:`_erase_landed`).
 
     Replay idempotency: ids already absent from the corpus are
     dropped by an anti-join (a redelivered or unknown id is a no-op),
@@ -902,25 +926,11 @@ def descent_graph_erasure_stream(
 
     Returns the started StreamingQuery (caller stops it)."""
     import os
-    import shutil
-
-    from pyspark.sql import types as T
 
     from spark_streaming_kafka2elasticsearch_spark.operators.similarity import (
         nn_descent_delete,
     )
-    from spark_streaming_kafka2elasticsearch_spark.sources.writer import (
-        overwrite_partitions,
-    )
 
-    id_schema = T.StructType([T.StructField("vec_id", T.LongType())])
-    parsed = (
-        source.load_stream(spark)
-        .select(
-            F.from_json(F.col("value").cast("string"), id_schema).alias("v")
-        )
-        .select("v.*")
-    )
     corpus_dir = os.path.join(graph_path, "corpus")
     edges_dir = os.path.join(graph_path, "edges")
 
@@ -964,36 +974,11 @@ def descent_graph_erasure_stream(
             )
             new_edges.write.mode("overwrite").parquet(edges_dir)
         # corpus surgery AFTER the stamped edge rewrite (the crash
-        # window then replays into the stamp-guard above): only the
-        # batch_id partitions holding a deleted id are rewritten
-        touched = {
-            int(r["batch_id"])
-            for r in corpus.join(dele, "vec_id", "left_semi")
-            .select("batch_id")
-            .distinct()
-            .collect()
-        }
-        remaining = (
-            corpus.filter(F.col("batch_id").isin(sorted(touched)))
-            .join(dele, "vec_id", "left_anti")
-            .localCheckpoint(eager=True)
-        )
-        if not remaining.isEmpty():
-            overwrite_partitions(remaining, corpus_dir, ["batch_id"])
-        kept = {
-            int(r["batch_id"])
-            for r in remaining.select("batch_id").distinct().collect()
-        }
-        for bid in touched - kept:
-            shutil.rmtree(
-                os.path.join(corpus_dir, f"batch_id={bid}"),
-                ignore_errors=True,
-            )
+        # window then replays into the stamp-guard above)
+        _erase_landed(corpus, dele, "vec_id", corpus_dir)
 
-    return (
-        parsed.writeStream.foreachBatch(erase)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    return _run_per_batch(
+        _parse_json_stream(spark, source, "vec_id BIGINT"), erase, checkpoint_dir
     )
 
 
@@ -1033,7 +1018,7 @@ def bm25_index_maintenance_stream(
         bm25_index_reconcile,
     )
 
-    parsed = _parse_doc_stream(spark, source)
+    parsed = _parse_json_stream(spark, source, _DOC_DDL)
     bm25_index_reconcile(spark, index_path)
 
     def fold(batch: DataFrame, batch_id: int) -> None:
@@ -1042,11 +1027,7 @@ def bm25_index_maintenance_stream(
             return
         bm25_index_append(index_path, batch.select("doc_id", "text"))
 
-    return (
-        parsed.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
+    return _run_per_batch(parsed, fold, checkpoint_dir)
 
 
 def bm25_index_erasure_stream(
@@ -1068,21 +1049,12 @@ def bm25_index_erasure_stream(
     squares the counters before new batches flow.
 
     Returns the started StreamingQuery."""
-    from pyspark.sql import types as T
-
     from spark_streaming_kafka2elasticsearch_spark.operators.bm25_index import (
         bm25_index_delete,
         bm25_index_reconcile,
     )
 
-    id_schema = T.StructType([T.StructField("doc_id", T.LongType())])
-    parsed = (
-        source.load_stream(spark)
-        .select(
-            F.from_json(F.col("value").cast("string"), id_schema).alias("v")
-        )
-        .select("v.*")
-    )
+    parsed = _parse_json_stream(spark, source, "doc_id BIGINT")
     bm25_index_reconcile(spark, index_path)
 
     def erase(batch: DataFrame, batch_id: int) -> None:
@@ -1091,11 +1063,7 @@ def bm25_index_erasure_stream(
             return
         bm25_index_delete(spark, index_path, batch.select("doc_id"))
 
-    return (
-        parsed.writeStream.foreachBatch(erase)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
+    return _run_per_batch(parsed, erase, checkpoint_dir)
 
 
 def kn_lm_index_maintenance_stream(
@@ -1109,13 +1077,12 @@ def kn_lm_index_maintenance_stream(
     envelopes is folded in as one count segment
     (:func:`kn_index_append` — delta-only text scan, blind parquet
     add) and its text lands in ``index_path/corpus/``
-    (batch_id-partitioned dynamic overwrite) so the erasure stream
-    can look erased documents' text back up.  Replay idempotency is
-    structural twice over: the doclog/removed first-seen gate drops
-    redelivered ids, and a crash between the segment write and the
-    doclog write replays into an IDENTICAL deterministic ``_seg``
-    that the merge dedups — counts can never double.  The corpus
-    partition overwrite is idempotent by keying.
+    (:func:`_land_batch`) so the erasure stream can look erased
+    documents' text back up.  Replay idempotency is structural twice
+    over: the doclog/removed first-seen gate drops redelivered ids,
+    and a crash between the segment write and the doclog write
+    replays into an IDENTICAL deterministic ``_seg`` that the merge
+    dedups — counts can never double.
 
     The caller persists the initial index over a NON-EMPTY corpus
     before starting.  Returns the started StreamingQuery."""
@@ -1124,11 +1091,7 @@ def kn_lm_index_maintenance_stream(
     from spark_streaming_kafka2elasticsearch_spark.operators.lm_index import (
         kn_index_append,
     )
-    from spark_streaming_kafka2elasticsearch_spark.sources.writer import (
-        overwrite_partitions,
-    )
 
-    parsed = _parse_doc_stream(spark, source)
     corpus_dir = os.path.join(index_path, "corpus")
 
     def fold(batch: DataFrame, batch_id: int) -> None:
@@ -1151,17 +1114,11 @@ def kn_lm_index_maintenance_stream(
             )
         fresh = fresh.localCheckpoint(eager=True)
         if not fresh.isEmpty():
-            overwrite_partitions(
-                fresh.withColumn("batch_id", F.lit(int(batch_id))),
-                corpus_dir,
-                ["batch_id"],
-            )
+            _land_batch(fresh, corpus_dir, int(batch_id))
         kn_index_append(index_path, batch.select("doc_id", "text"))
 
-    return (
-        parsed.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    return _run_per_batch(
+        _parse_json_stream(spark, source, _DOC_DDL), fold, checkpoint_dir
     )
 
 
@@ -1176,56 +1133,35 @@ def kn_lm_index_erasure_stream(
     ``{"doc_id": N}`` envelopes, the erasure twin of
     :func:`kn_lm_index_maintenance_stream`.  Deletion needs the
     documents' TEXT (the negated count segment is computed from it),
-    so each batch's ids are joined back to the text stores FIRST —
-    the stream's own landed ``corpus/`` partitions plus the optional
-    ``static_corpus`` for documents indexed before the stream — then
-    :func:`kn_index_delete` appends the negative segment, and LAST
-    the landed corpus partitions holding the erased ids are
-    surgically rewritten (dynamic overwrite + emptied-partition
-    rmtree) so the text itself is gone.  That ordering is the GDPR
-    ordering — read, negate, then destroy — and makes replay safe:
-    the removed-table gate turns a redelivered id into a count no-op,
-    while the corpus surgery (idempotent by keying) always re-runs to
-    completion, closing the negate-landed/text-not-yet-destroyed
-    crash window.  Unknown ids no-op at every step.
+    so each batch's ids are joined back to the text stores FIRST
+    (:func:`_corpus_texts` — the stream's own landed ``corpus/`` plus
+    the optional ``static_corpus`` for documents indexed before the
+    stream) — then :func:`kn_index_delete` appends the negative
+    segment, and LAST the landed corpus partitions holding the erased
+    ids are rewritten without them (:func:`_erase_landed`) so the text
+    itself is gone.  That ordering is the GDPR ordering — read,
+    negate, then destroy — and makes replay safe: the removed-table
+    gate turns a redelivered id into a count no-op, while the corpus
+    surgery always re-runs to completion, closing the
+    negate-landed/text-not-yet-destroyed crash window.  Unknown ids
+    no-op at every step.
 
     Returns the started StreamingQuery."""
     import os
-    import shutil
-
-    from pyspark.sql import types as T
 
     from spark_streaming_kafka2elasticsearch_spark.operators.lm_index import (
         kn_index_delete,
     )
-    from spark_streaming_kafka2elasticsearch_spark.sources.writer import (
-        overwrite_partitions,
-    )
 
-    id_schema = T.StructType([T.StructField("doc_id", T.LongType())])
-    parsed = (
-        source.load_stream(spark)
-        .select(
-            F.from_json(F.col("value").cast("string"), id_schema).alias("v")
-        )
-        .select("v.*")
-    )
     corpus_dir = os.path.join(index_path, "corpus")
 
     def erase(batch: DataFrame, batch_id: int) -> None:
         batch = batch.dropDuplicates(["doc_id"]).localCheckpoint(eager=True)
         if batch.isEmpty():
             return
-        texts = [static_corpus] if static_corpus is not None else []
-        landed = None
-        if os.path.isdir(corpus_dir):
-            landed = spark.read.parquet(corpus_dir)
-            texts.append(landed.select("doc_id", "text"))
-        if not texts:
+        corpus_texts = _corpus_texts(spark, static_corpus, corpus_dir)
+        if corpus_texts is None:
             return
-        corpus_texts = texts[0]
-        for t in texts[1:]:
-            corpus_texts = corpus_texts.unionByName(t)
         # dropDuplicates: a doc present in more than one text store
         # (static + landed, or any landed duplication) must negate its
         # counts exactly once
@@ -1233,38 +1169,13 @@ def kn_lm_index_erasure_stream(
             ["doc_id"]
         )
         kn_index_delete(index_path, gone)
-        if landed is None:
-            return
-        touched = {
-            int(r["batch_id"])
-            for r in landed.join(batch, "doc_id", "left_semi")
-            .select("batch_id")
-            .distinct()
-            .collect()
-        }
-        if not touched:
-            return
-        remaining = (
-            landed.filter(F.col("batch_id").isin(sorted(touched)))
-            .join(batch, "doc_id", "left_anti")
-            .localCheckpoint(eager=True)
-        )
-        if not remaining.isEmpty():
-            overwrite_partitions(remaining, corpus_dir, ["batch_id"])
-        kept = {
-            int(r["batch_id"])
-            for r in remaining.select("batch_id").distinct().collect()
-        }
-        for bid in touched - kept:
-            shutil.rmtree(
-                os.path.join(corpus_dir, f"batch_id={bid}"),
-                ignore_errors=True,
+        if os.path.isdir(corpus_dir):
+            _erase_landed(
+                spark.read.parquet(corpus_dir), batch, "doc_id", corpus_dir
             )
 
-    return (
-        parsed.writeStream.foreachBatch(erase)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    return _run_per_batch(
+        _parse_json_stream(spark, source, "doc_id BIGINT"), erase, checkpoint_dir
     )
 
 
@@ -1290,45 +1201,37 @@ def front_door_stream(
 ):
     """The COMPLETE crawl front door: all five ingestion gates chained
     over ONE document stream (VERDICT r9 item 7) — the integration the
-    gate family exists for.  Per arriving document, in order:
+    gate family exists for.  Per arriving document, in order, each leg
+    the same function its standalone gate job calls:
 
-    1. **quality + exact-dup** — the ``documents_ingest_stream`` leg:
-       quality gate, canonical fingerprint, cross-batch first-seen
-       dedup (``applyInPandasWithState``; the ONE stateful stage, so
-       it runs stream-side, before the per-batch gates).
-    2. **near-dup** — ``delta_corpus_jaccard_pairs`` against the
-       static at-rest ``corpus`` (the ``near_dup_gate_stream`` leg).
-    3. **DSIR relevance** — score against the fitted ``weights`` table,
-       keep ``dsir_logratio ≥ min_logratio``; featureless docs never
-       pass (the ``dsir_gate_stream`` leg, same setup count-check).
-    4. **semantic decontamination** — the survivor's embedding (looked
-       up in the static ``doc_embeddings`` table keyed by ``doc_id`` —
-       the deterministic stand-in for the embedding service a real
-       ingest calls; docs WITHOUT an embedding row fail CLOSED, since
-       an unverifiable doc cannot be proven clean) screened against
-       the ``evals`` matrix (the ``semantic_decon_gate_stream`` leg).
+    1. **quality + exact-dup** — :func:`_first_seen_docs` (the
+       ``documents_ingest_stream`` leg; stateful, so stream-side).
+    2. **near-dup** — :func:`_near_dup_survivors` against the static
+       at-rest ``corpus`` (the ``near_dup_gate_stream`` leg).
+    3. **DSIR relevance** — :func:`_dsir_kept` against the fitted
+       ``weights`` table, set up by :func:`_dsir_weights` (the
+       ``dsir_gate_stream`` leg).
+    4. **semantic decontamination** — :func:`_semantic_clean_ids` over
+       the survivor's embedding (looked up in the static
+       ``doc_embeddings`` table keyed by ``doc_id`` — the
+       deterministic stand-in for the embedding service a real ingest
+       calls; docs WITHOUT an embedding row fail CLOSED, since an
+       unverifiable doc cannot be proven clean), screened against the
+       ``evals`` matrix (the ``semantic_decon_gate_stream`` leg).
     5. **tokenize** — survivors encoded against the pre-trained BPE
        ``lexicon`` (the ``tokenize_ingest_stream`` leg).
 
     Survivor documents land in ``{sink_dir}/docs`` (with their DSIR
-    score), their subword encodings in ``{sink_dir}/tokens``.  Gates
-    2–5 are stateless per-document screens against static artifacts,
-    so they compose inside ONE ``foreachBatch`` — one micro-batch
-    pass, no intermediate landing zones — and the composed kept-set
-    provably equals running the batch operators over the union of all
-    batches (pytest-pinned across ≥2 micro-batches).  At 100 TB each
-    static artifact (corpus postings, lexicon, weight table, eval
-    matrix, embeddings) is a maintained table on its own refresh
-    cadence; the stream wiring here is unchanged.
-
-    **Replay-idempotent landing (ADVICE r10)**: both sinks are
-    ``batch_id``-partitioned and written via dynamic partition
-    overwrite — foreachBatch is at-least-once, and a retried
-    micro-batch (same batch_id, Spark's checkpoint contract)
-    overwrites exactly its own partition in BOTH sinks instead of
-    double-appending; a crash between the two writes is repaired by
-    the replay for the same reason, and the sinks reconcile by
-    batch_id.
+    score), their subword encodings in ``{sink_dir}/tokens``, both by
+    :func:`_land_batch` (replay-idempotent; the two zones reconcile by
+    batch_id).  Gates 2–5 are stateless per-document screens against
+    static artifacts, so they compose inside ONE ``foreachBatch`` —
+    one micro-batch pass, no intermediate landing zones — and the
+    composed kept-set provably equals running the batch operators over
+    the union of all batches (pytest-pinned across ≥2 micro-batches).
+    At 100 TB each static artifact (corpus postings, lexicon, weight
+    table, eval matrix, embeddings) is a maintained table on its own
+    refresh cadence; the stream wiring here is unchanged.
 
     **Index maintenance composition (VERDICT r10 item 8)**: when
     ``ivf_index_path``/``ivf_centroids`` are given, each batch's
@@ -1343,32 +1246,13 @@ def front_door_stream(
     """
     import os
 
-    from spark_streaming_kafka2elasticsearch_spark.operators.dedup import (
-        delta_corpus_jaccard_pairs,
-    )
-    from spark_streaming_kafka2elasticsearch_spark.operators.similarity import (
-        semantic_contamination_flags,
-    )
     from spark_streaming_kafka2elasticsearch_spark.operators.text import (
         bpe_encode_with_lexicon,
-        document_fingerprint,
-        dsir_score_with_weights,
-        text_quality,
-    )
-    from spark_streaming_kafka2elasticsearch_spark.streaming.stateful import (
-        streaming_first_seen,
     )
 
-    # Static artifacts materialize ONCE at gate setup (the dsir_gate /
-    # semantic_gate discipline): a lazy relation would re-derive them
-    # inside every micro-batch.
-    weights = weights.localCheckpoint(eager=True)
-    n_w = weights.count()
-    if n_w != n_buckets:
-        raise ValueError(
-            f"weight table has {n_w} rows but n_buckets={n_buckets}; "
-            "the fit and the scorer must agree on the bucket count"
-        )
+    # Static artifacts materialize ONCE at gate setup: a lazy relation
+    # would re-derive them inside every micro-batch.
+    weights = _dsir_weights(weights, n_buckets)
     evals = evals.localCheckpoint(eager=True)
     doc_embeddings = doc_embeddings.localCheckpoint(eager=True)
     if (ivf_index_path is None) != (ivf_centroids is None):
@@ -1378,76 +1262,42 @@ def front_door_stream(
     if ivf_centroids is not None:
         ivf_centroids = ivf_centroids.localCheckpoint(eager=True)
 
-    parsed = _parse_doc_stream(spark, source)
-    quality = text_quality(parsed).filter(
-        (F.col("n_tokens") >= min_tokens)
-        & (F.col("alpha_ratio") >= min_alpha_ratio)
-    )
-    deduped = streaming_first_seen(
-        document_fingerprint(quality),
-        key_col="fingerprint",
-        value_cols=["doc_id", "lang", "text", "n_tokens"],
+    deduped = _first_seen_docs(
+        _parse_json_stream(spark, source, _DOC_DDL),
+        min_tokens,
+        min_alpha_ratio,
+        ["doc_id", "lang", "text", "n_tokens"],
     )
 
+    def embeddings_of(docs: DataFrame) -> DataFrame:
+        return (
+            docs.select("doc_id")
+            .join(doc_embeddings, "doc_id")
+            .select(F.col("doc_id").alias("vec_id"), "embedding")
+        )
+
     def gates(batch: DataFrame, batch_id: int) -> None:
-        # near-dup vs the at-rest corpus
-        hits = (
-            delta_corpus_jaccard_pairs(
-                batch,
-                corpus,
-                id_col="doc_id",
-                block_cols=["lang"],
-                min_jaccard=min_jaccard,
-                max_doc_freq=max_doc_freq,
-            )
-            .select(F.col("delta_id").alias("doc_id"))
-            .distinct()
-        )
-        survivors = batch.join(hits, "doc_id", "left_anti")
-        # DSIR relevance
-        scored = dsir_score_with_weights(
-            survivors, weights, id_col="doc_id", n_buckets=n_buckets
-        )
+        survivors = _near_dup_survivors(batch, corpus, min_jaccard, max_doc_freq)
         survivors = survivors.join(
-            scored.filter(F.col("dsir_logratio") >= min_logratio).select(
+            _dsir_kept(survivors, weights, n_buckets, min_logratio).select(
                 "doc_id", "dsir_logratio"
             ),
             "doc_id",
         )
-        # semantic decontamination (fail closed on missing embedding)
-        vecs = survivors.select("doc_id").join(doc_embeddings, "doc_id").select(
-            F.col("doc_id").alias("vec_id"), "embedding"
-        )
-        clean = (
-            semantic_contamination_flags(vecs, evals, threshold=threshold)
-            .filter(~F.col("is_contaminated"))
-            .select(F.col("vec_id").alias("doc_id"))
-        )
+        clean = _semantic_clean_ids(
+            embeddings_of(survivors), evals, threshold
+        ).select(F.col("vec_id").alias("doc_id"))
         survivors = survivors.join(clean, "doc_id", "left_semi")
-        # land survivors + their tokenization, replay-idempotently:
-        # each sink is batch_id-partitioned and dynamically
-        # overwritten, so an at-least-once retry of this micro-batch
-        # replaces its own partition in both sinks (never
-        # double-appends), and a crash between the two writes is
-        # repaired by the replay.
-        from spark_streaming_kafka2elasticsearch_spark.sources.writer import (
-            overwrite_partitions,
-        )
-
         survivors = survivors.localCheckpoint(eager=True)
-        overwrite_partitions(
-            survivors.select(
-                "doc_id", "lang", "text", "n_tokens", "dsir_logratio"
-            ).withColumn("batch_id", F.lit(batch_id)),
+        _land_batch(
+            survivors.select("doc_id", "lang", "text", "n_tokens", "dsir_logratio"),
             os.path.join(sink_dir, "docs"),
-            ["batch_id"],
+            batch_id,
         )
-        overwrite_partitions(
-            bpe_encode_with_lexicon(survivors, lexicon).withColumn(
-                "batch_id", F.lit(batch_id)
-            ),
+        _land_batch(
+            bpe_encode_with_lexicon(survivors, lexicon),
             os.path.join(sink_dir, "tokens"),
-            ["batch_id"],
+            batch_id,
         )
         if ivf_index_path is not None:
             # make this batch's survivors SEARCHABLE: assign their
@@ -1458,21 +1308,14 @@ def front_door_stream(
                 ivf_persisted_append,
             )
 
-            surv_vecs = (
-                survivors.select("doc_id")
-                .join(doc_embeddings, "doc_id")
-                .select(F.col("doc_id").alias("vec_id"), "embedding")
-            )
             ivf_persisted_append(
-                surv_vecs, ivf_centroids, ivf_index_path, batch_id=batch_id
+                embeddings_of(survivors),
+                ivf_centroids,
+                ivf_index_path,
+                batch_id=batch_id,
             )
 
-    return (
-        deduped.writeStream.foreachBatch(gates)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
+    return _run_per_batch(deduped, gates, checkpoint_dir)
 
 
 def gated_attribution_stream(
@@ -1503,12 +1346,10 @@ def gated_attribution_stream(
     leans on the dedup gate: a replayed event_id would double-count
     pairs, so the first-seen screen is load-bearing, not decorative.
 
-    Replay idempotency (the front_door_stream discipline): survivors
-    land under ``{sink_dir}/events`` and attribution pairs under
-    ``{sink_dir}/attribution``, both ``batch_id``-partitioned and
-    dynamically overwritten — an at-least-once retry replaces its own
-    partitions (the prior-batch state it reads back is unchanged), so
-    at-least-once × idempotent overwrite = effectively-once.
+    Replay idempotency: survivors land under ``{sink_dir}/events`` and
+    attribution pairs under ``{sink_dir}/attribution``, both by
+    :func:`_land_batch` — a retry replaces its own partitions, and the
+    prior-batch state it reads back is unchanged.
 
     State at 100 TB: the landed event zone is the join state, bounded
     by retention policy on the ``batch_id`` partitions (the watermark
@@ -1519,29 +1360,14 @@ def gated_attribution_stream(
     """
     import os
 
-    from pyspark.sql import types as T
-
-    from spark_streaming_kafka2elasticsearch_spark.sources.writer import (
-        overwrite_partitions,
-    )
     from spark_streaming_kafka2elasticsearch_spark.streaming.stateful import (
         streaming_first_seen,
     )
 
-    ev_schema = T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("ts_us", T.LongType()),
-        ]
-    )
-    parsed = (
-        events_source.load_stream(spark)
-        .select(
-            F.from_json(F.col("value").cast("string"), ev_schema).alias("e")
-        )
-        .select("e.*")
+    parsed = _parse_json_stream(
+        spark,
+        events_source,
+        "event_id BIGINT, user_id BIGINT, event_type STRING, ts_us BIGINT",
     )
     valid = parsed.filter(
         F.col("event_id").isNotNull()
@@ -1558,11 +1384,7 @@ def gated_attribution_stream(
 
     def attribute(batch: DataFrame, batch_id: int) -> None:
         batch = batch.localCheckpoint(eager=True)
-        overwrite_partitions(
-            batch.withColumn("batch_id", F.lit(batch_id)),
-            events_dir,
-            ["batch_id"],
-        )
+        _land_batch(batch, events_dir, batch_id)
         landed = spark.read.parquet(events_dir)
         prev = landed.filter(F.col("batch_id") < batch_id)
         upto = landed.filter(F.col("batch_id") <= batch_id)
@@ -1600,18 +1422,9 @@ def gated_attribution_stream(
         delta_out = _join(_p(batch), _c(upto)).union(
             _join(_p(prev), _c(batch))
         )
-        overwrite_partitions(
-            delta_out.withColumn("batch_id", F.lit(batch_id)),
-            attr_dir,
-            ["batch_id"],
-        )
+        _land_batch(delta_out, attr_dir, batch_id)
 
-    return (
-        survivors.writeStream.foreachBatch(attribute)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
+    return _run_per_batch(survivors, attribute, checkpoint_dir)
 
 
 _INTERVAL_UNITS_US = {
@@ -1692,25 +1505,11 @@ def attribution_stream(
     user_id, click_id, secs_before) — a pytest pins streaming ≡ batch
     over multi-file replays.
     """
-    from pyspark.sql import types as T
-
-    ev_schema = T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("ts_us", T.LongType()),
-        ]
-    )
 
     def parse(source: Any) -> DataFrame:
-        return (
-            source.load_stream(spark)
-            .select(
-                F.from_json(F.col("value").cast("string"), ev_schema).alias("e")
-            )
-            .select("e.*")
-            .withColumn("ts", F.timestamp_micros(F.col("ts_us")))
-        )
+        return _parse_json_stream(
+            spark, source, "event_id BIGINT, user_id BIGINT, ts_us BIGINT"
+        ).withColumn("ts", F.timestamp_micros(F.col("ts_us")))
 
     clicks = (
         parse(clicks_source)

@@ -28,6 +28,7 @@ import os
 import shutil
 import tempfile
 import uuid
+from collections.abc import Callable
 from dataclasses import dataclass, field
 from typing import Any
 
@@ -53,58 +54,143 @@ def start_console_sink(
     )
 
 
+def _start_foreach_batch(
+    write_batch: Callable[[DataFrame, int], None],
+    stream: DataFrame,
+    checkpoint_dir: str,
+    query_name: str,
+) -> StreamingQuery:
+    """Wire a sink as the reference does: foreachBatch + queryName +
+    start (reference ``:521-531``), with the checkpoint location (K4)
+    on the stream writer where it belongs (the reference quirkily put
+    it inside the batch writer, ``:517``)."""
+    return (
+        stream.writeStream.foreachBatch(write_batch)
+        .option("checkpointLocation", checkpoint_dir)
+        .queryName(query_name)
+        .start()
+    )
+
+
+def _foreach_batch_start(default_query_name: str) -> Any:
+    """The ``start`` method of a foreachBatch sink whose checkpoint
+    defaults to a fresh temp directory (tests and local runs; the ES
+    sink makes it required)."""
+
+    def start(
+        self,
+        stream: DataFrame,
+        checkpoint_dir: str | None = None,
+        query_name: str = default_query_name,
+    ) -> StreamingQuery:
+        if checkpoint_dir is None:
+            checkpoint_dir = tempfile.mkdtemp(prefix="chk_")
+        return _start_foreach_batch(
+            self.write_batch, stream, checkpoint_dir, query_name
+        )
+
+    return start
+
+
+def _rename_if_exists(src: str, dst: str) -> None:
+    if os.path.exists(src):
+        os.rename(src, dst)
+
+
+def _swap_table(
+    spark: Any, path: str, build: Callable[[DataFrame | None], DataFrame]
+) -> None:
+    """Replace the parquet table at ``path`` with ``build(prev)``, where
+    ``prev`` is the current table (None before the first write).
+
+    The new table is written next to the old one, then swapped in:
+    old table aside, new table in, old table deleted.  A crash between
+    the two renames leaves no table at ``path`` but the old one aside,
+    and the next call restores it BEFORE reading ``prev`` — so a
+    replayed epoch merges into the full history instead of starting
+    from an empty table.  A crash after the second rename leaves a
+    stale aside copy, dropped by the next call.  Atomic enough for
+    tests; production binds the same ``write_batch`` contract to a
+    transactional store (Delta/Iceberg/ES)."""
+    aside = f"{path}__old"
+    if os.path.exists(path):
+        shutil.rmtree(aside, ignore_errors=True)
+    else:
+        _rename_if_exists(aside, path)
+    prev = spark.read.parquet(path) if os.path.exists(path) else None
+    tmp = f"{path}__tmp_{uuid.uuid4().hex}"
+    build(prev).write.mode("overwrite").parquet(tmp)
+    _rename_if_exists(path, aside)
+    _rename_if_exists(tmp, path)
+    shutil.rmtree(aside, ignore_errors=True)
+
+
+def _fold_once(
+    path: str, lineage: str, epoch_id: int, fold: Callable[[], None]
+) -> None:
+    """Exactly-once effect for an ADDITIVE fold under at-least-once
+    delivery: run ``fold()`` unless ``epoch_id`` ≤ the last epoch
+    applied to ``path`` by this lineage, then record ``epoch_id``.
+
+    An upsert replay converges because overwrite is idempotent, but a
+    fold would double-count a replayed epoch — so the sink keeps an
+    epoch marker next to the table and skips any epoch ≤ it.  Epochs
+    are per QUERY LINEAGE (a checkpoint's epoch counter restarts from 0
+    for a new query), so the marker is scoped by ``lineage``: one table
+    fed by several writers (or by a query restarted with a FRESH
+    checkpoint) needs a distinct lineage per writer, or the new
+    writer's epoch 0 would be mistaken for a replay of the old one's.
+
+    The marker is written after the table swap; a crash BETWEEN the
+    two re-folds one epoch on restart — a transactional store
+    (Delta/Iceberg) commits both in one transaction, which is the
+    production binding of this contract and why the two writes sit
+    adjacent here."""
+    marker = f"{path}__epoch_{lineage}"
+    last = -1
+    if os.path.exists(marker):
+        with open(marker) as fh:
+            last = int(fh.read().strip() or -1)
+    if epoch_id <= last:
+        return  # replayed epoch: already folded
+    fold()
+    with open(marker, "w") as fh:
+        fh.write(str(epoch_id))
+
+
 @dataclass
 class KeyedUpsertParquetSink:
     """K2 (test/local impl) — foreachBatch MERGE-by-key into parquet.
 
-    Last-write-wins per ``key_col`` within and across batches; replayed
-    epochs converge to the same table (idempotent).  The table swap is
-    write-tmp-then-rename — atomic enough for tests; production should
-    bind the same ``write_batch`` contract to a transactional store.
+    ACROSS batches a later batch's row replaces the stored row for its
+    ``key_col`` (last write wins); replayed epochs converge to the same
+    table (idempotent).  WITHIN one batch, rows sharing a key collapse
+    to ONE ARBITRARY row (``dropDuplicates``), not the latest — the
+    batch rows carry no order column to pick the last write by.  The
+    table swap is :func:`_swap_table`.
     """
 
     path: str
     key_col: str = "data_key"
 
     def write_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
+        # Looked up at call time, so a caller can wrap the module
+        # attribute.  One MERGE definition for the whole engine: the
+        # batch operator IS the per-epoch upsert (anti-join + union).
         from spark_streaming_kafka2elasticsearch_spark.operators.merge import (
             merge_upsert,
         )
 
-        spark = batch_df.sparkSession
         fresh = batch_df.dropDuplicates([self.key_col])
-        if os.path.exists(self.path):
-            # One MERGE definition for the whole engine: the batch
-            # operator IS the per-epoch upsert (anti-join + union).
-            merged = merge_upsert(
-                spark.read.parquet(self.path), fresh, keys=[self.key_col]
-            )
-        else:
-            merged = fresh
-        tmp = f"{self.path}__tmp_{uuid.uuid4().hex}"
-        merged.write.mode("overwrite").parquet(tmp)
-        if os.path.exists(self.path):
-            shutil.rmtree(self.path)
-        os.rename(tmp, self.path)
-
-    def start(
-        self,
-        stream: DataFrame,
-        checkpoint_dir: str | None = None,
-        query_name: str = "keyed_upsert",
-    ) -> StreamingQuery:
-        """Wire as the reference does: foreachBatch + queryName + start
-        (reference ``:521-531``), with the checkpoint location (K4) on
-        the stream writer where it belongs (the reference quirkily put
-        it inside the batch writer, ``:517``)."""
-        if checkpoint_dir is None:
-            checkpoint_dir = tempfile.mkdtemp(prefix="chk_")
-        return (
-            stream.writeStream.foreachBatch(self.write_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .queryName(query_name)
-            .start()
+        _swap_table(
+            batch_df.sparkSession,
+            self.path,
+            lambda prev: fresh
+            if prev is None
+            else merge_upsert(prev, fresh, keys=[self.key_col]),
         )
+
+    start = _foreach_batch_start("keyed_upsert")
 
     def read(self, spark: Any) -> DataFrame:
         return spark.read.parquet(self.path)
@@ -127,20 +213,7 @@ class KeyedUpsertMemorySink:
         for row in batch_df.collect():
             self.rows[row[self.key_col]] = row.asDict()
 
-    def start(
-        self,
-        stream: DataFrame,
-        checkpoint_dir: str | None = None,
-        query_name: str = "keyed_upsert_mem",
-    ) -> StreamingQuery:
-        if checkpoint_dir is None:
-            checkpoint_dir = tempfile.mkdtemp(prefix="chk_")
-        return (
-            stream.writeStream.foreachBatch(self.write_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .queryName(query_name)
-            .start()
-        )
+    start = _foreach_batch_start("keyed_upsert_mem")
 
 
 @dataclass
@@ -191,11 +264,8 @@ class ElasticsearchUpsertSink:
         checkpoint_dir: str,
         query_name: str = "es_upsert",
     ) -> StreamingQuery:
-        return (
-            stream.writeStream.foreachBatch(self.write_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .queryName(query_name)
-            .start()
+        return _start_foreach_batch(
+            self.write_batch, stream, checkpoint_dir, query_name
         )
 
 
@@ -296,20 +366,7 @@ class KeyedUpsertJdbcSink:
         finally:
             conn.close()
 
-    def start(
-        self,
-        stream: DataFrame,
-        checkpoint_dir: str | None = None,
-        query_name: str = "jdbc_upsert",
-    ) -> StreamingQuery:
-        if checkpoint_dir is None:
-            checkpoint_dir = tempfile.mkdtemp(prefix="chk_")
-        return (
-            stream.writeStream.foreachBatch(self.write_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .queryName(query_name)
-            .start()
-        )
+    start = _foreach_batch_start("jdbc_upsert")
 
     def read(self, spark: Any) -> DataFrame:
         return (
@@ -400,59 +457,38 @@ class IncrementalAggParquetSink:
     (state is the aggregate TABLE, not an in-memory store; history is
     never rescanned).
 
-    Idempotence differs from the upsert sinks in kind: an upsert
-    replay converges because overwrite is idempotent, but a FOLD is
-    additive — replaying an epoch would double-count.  So this sink
-    keeps an epoch watermark next to the table and silently skips any
-    epoch ≤ the last applied one (exactly-once effect under
-    at-least-once delivery).  The marker is written after the table
-    swap; a crash BETWEEN the two re-folds one epoch on restart — a
-    transactional store (Delta/Iceberg) commits both in one
-    transaction, which is the production binding of this contract and
-    why the two writes sit adjacent here.
+    A fold is additive, so replays are skipped by the per-lineage
+    epoch marker of :func:`_fold_once` (exactly-once effect under
+    at-least-once delivery); the table swap is :func:`_swap_table`.
     """
 
     path: str
     keys: tuple[str, ...] = ("k",)
     sum_cols: tuple[str, ...] = ("v",)
     count_col: str = "n_rows"
-    #: Epoch watermarks are per QUERY LINEAGE (a checkpoint's epoch
-    #: counter restarts from 0 for a new query) — so the marker is
-    #: scoped by this name.  One MV fed by several writers (or by a
-    #: query restarted with a FRESH checkpoint) needs a distinct
-    #: lineage per writer, or the new writer's epoch 0 would be
-    #: mistaken for a replay of the old one's.
+    #: Scopes the epoch marker — one lineage per writer (see
+    #: :func:`_fold_once`).
     lineage: str = "default"
-
-    def _marker(self) -> str:
-        return f"{self.path}__epoch_{self.lineage}"
 
     def write_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
         from spark_streaming_kafka2elasticsearch_spark.operators.merge import (
             incremental_agg_merge,
         )
 
-        last = -1
-        if os.path.exists(self._marker()):
-            with open(self._marker()) as fh:
-                last = int(fh.read().strip() or -1)
-        if epoch_id <= last:
-            return  # replayed epoch: already folded
-        spark = batch_df.sparkSession
-        if os.path.exists(self.path):
-            prev = spark.read.parquet(self.path)
-        else:
-            prev = self._empty_agg(batch_df)
-        out = incremental_agg_merge(
-            prev, batch_df, list(self.keys), list(self.sum_cols), self.count_col
-        )
-        tmp = f"{self.path}__tmp_{uuid.uuid4().hex}"
-        out.write.mode("overwrite").parquet(tmp)
-        if os.path.exists(self.path):
-            shutil.rmtree(self.path)
-        os.rename(tmp, self.path)
-        with open(self._marker(), "w") as fh:
-            fh.write(str(epoch_id))
+        def fold() -> None:
+            _swap_table(
+                batch_df.sparkSession,
+                self.path,
+                lambda prev: incremental_agg_merge(
+                    self._empty_agg(batch_df) if prev is None else prev,
+                    batch_df,
+                    list(self.keys),
+                    list(self.sum_cols),
+                    self.count_col,
+                ),
+            )
+
+        _fold_once(self.path, self.lineage, epoch_id, fold)
 
     def _empty_agg(self, batch_df: DataFrame) -> DataFrame:
         dec = "decimal(28,10)"
@@ -462,20 +498,7 @@ class IncrementalAggParquetSink:
             F.lit(0).cast("long").alias(self.count_col),
         )
 
-    def start(
-        self,
-        stream: DataFrame,
-        checkpoint_dir: str | None = None,
-        query_name: str = "incremental_agg",
-    ) -> StreamingQuery:
-        if checkpoint_dir is None:
-            checkpoint_dir = tempfile.mkdtemp(prefix="chk_")
-        return (
-            stream.writeStream.foreachBatch(self.write_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .queryName(query_name)
-            .start()
-        )
+    start = _foreach_batch_start("incremental_agg")
 
     def read(self, spark: Any) -> DataFrame:
         return spark.read.parquet(self.path)
@@ -492,9 +515,10 @@ class CountMinParquetSink:
 
     Mergeability is what makes this exactly-once-able the same way as
     IncrementalAggParquetSink: the fold is additive, so the sink keeps
-    the identical per-lineage epoch watermark and skips replayed
-    epochs.  The stored artifact stays ≤ depth×width rows forever —
-    state size is O(1) in stream length, the whole point of a sketch.
+    the same per-lineage epoch marker (:func:`_fold_once`) and skips
+    replayed epochs.  The stored artifact stays ≤ depth×width rows
+    forever — state size is O(1) in stream length, the whole point of
+    a sketch.
     """
 
     path: str
@@ -503,52 +527,27 @@ class CountMinParquetSink:
     width: int = 1024
     lineage: str = "default"
 
-    def _marker(self) -> str:
-        return f"{self.path}__epoch_{self.lineage}"
-
     def write_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
         from spark_streaming_kafka2elasticsearch_spark.operators.sketches import (
             countmin_merge,
             countmin_sketch,
         )
 
-        last = -1
-        if os.path.exists(self._marker()):
-            with open(self._marker()) as fh:
-                last = int(fh.read().strip() or -1)
-        if epoch_id <= last:
-            return  # replayed epoch: already folded
-        spark = batch_df.sparkSession
-        batch_sketch = countmin_sketch(
-            batch_df, self.item_col, depth=self.depth, width=self.width
-        )
-        if os.path.exists(self.path):
-            prev = spark.read.parquet(self.path)
-            merged = countmin_merge(prev.unionByName(batch_sketch))
-        else:
-            merged = batch_sketch
-        tmp = f"{self.path}__tmp_{uuid.uuid4().hex}"
-        merged.write.mode("overwrite").parquet(tmp)
-        if os.path.exists(self.path):
-            shutil.rmtree(self.path)
-        os.rename(tmp, self.path)
-        with open(self._marker(), "w") as fh:
-            fh.write(str(epoch_id))
+        def fold() -> None:
+            batch_sketch = countmin_sketch(
+                batch_df, self.item_col, depth=self.depth, width=self.width
+            )
+            _swap_table(
+                batch_df.sparkSession,
+                self.path,
+                lambda prev: batch_sketch
+                if prev is None
+                else countmin_merge(prev.unionByName(batch_sketch)),
+            )
 
-    def start(
-        self,
-        stream: DataFrame,
-        checkpoint_dir: str | None = None,
-        query_name: str = "countmin_sketch",
-    ) -> StreamingQuery:
-        if checkpoint_dir is None:
-            checkpoint_dir = tempfile.mkdtemp(prefix="chk_")
-        return (
-            stream.writeStream.foreachBatch(self.write_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .queryName(query_name)
-            .start()
-        )
+        _fold_once(self.path, self.lineage, epoch_id, fold)
+
+    start = _foreach_batch_start("countmin_sketch")
 
     def read(self, spark: Any) -> DataFrame:
         return spark.read.parquet(self.path)

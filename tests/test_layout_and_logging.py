@@ -193,6 +193,97 @@ def test_overwrite_partitions_touches_only_present_partitions(spark, tmp_path):
         overwrite_partitions(relanded, path, partition_by=[])
 
 
+def _partition_dirs(path):
+    import os
+
+    return sorted(
+        os.path.relpath(root, path)
+        for root, _, files in os.walk(path)
+        if any(f.endswith(".parquet") for f in files)
+    )
+
+
+def test_delete_from_partitions_one_level(spark, tmp_path):
+    """Only the scoped partitions are rewritten, and a partition whose
+    last row is deleted is removed — dynamic overwrite alone would
+    leave its old files serving the deleted row."""
+    import os
+
+    from spark_streaming_kafka2elasticsearch_spark.sources.writer import (
+        delete_from_partitions,
+        write_table,
+    )
+
+    path = str(tmp_path / "t")
+    write_table(
+        spark.createDataFrame(
+            [(1, 0), (2, 0), (3, 1), (4, 2)], "id long, part int"
+        ),
+        path,
+        partition_by=["part"],
+    )
+    untouched = {
+        f: os.path.getmtime(os.path.join(path, "part=2", f))
+        for f in os.listdir(os.path.join(path, "part=2"))
+    }
+    table = spark.read.parquet(path)
+    delete_from_partitions(
+        table.filter(F.col("part").isin([0, 1])),
+        spark.createDataFrame([(2,), (3,)], "id long"),
+        "id",
+        path,
+        ["part"],
+    )
+    assert _partition_dirs(path) == ["part=0", "part=2"]
+    assert not os.path.exists(os.path.join(path, "part=1"))
+    assert {
+        f: os.path.getmtime(os.path.join(path, "part=2", f))
+        for f in os.listdir(os.path.join(path, "part=2"))
+    } == untouched
+    got = {(r["id"], r["part"]) for r in spark.read.parquet(path).collect()}
+    assert got == {(1, 0), (4, 2)}
+
+
+def test_delete_from_partitions_two_levels(spark, tmp_path):
+    """Two partition levels: an emptied leaf is removed, and its parent
+    too once its last leaf is gone; a parent with a surviving leaf
+    stays."""
+    import os
+
+    from spark_streaming_kafka2elasticsearch_spark.sources.writer import (
+        delete_from_partitions,
+        write_table,
+    )
+
+    path = str(tmp_path / "t")
+    write_table(
+        spark.createDataFrame(
+            [(1, 0, 0), (2, 0, 1), (3, 1, 0), (5, 2, -1)],
+            "id long, cell int, batch_id int",
+        ),
+        path,
+        partition_by=["cell", "batch_id"],
+    )
+    table = spark.read.parquet(path)
+    delete_from_partitions(
+        table.filter(F.col("cell").isin([0, 1])),
+        spark.createDataFrame([(2,), (3,)], "id long"),
+        "id",
+        path,
+        ["cell", "batch_id"],
+    )
+    assert _partition_dirs(path) == [
+        os.path.join("cell=0", "batch_id=0"),
+        os.path.join("cell=2", "batch_id=-1"),
+    ]
+    assert not os.path.exists(os.path.join(path, "cell=1"))
+    got = {
+        (r["id"], r["cell"], r["batch_id"])
+        for r in spark.read.parquet(path).collect()
+    }
+    assert got == {(1, 0, 0), (5, 2, -1)}
+
+
 def test_compact_table_hits_file_target_and_preserves_rows(spark, tmp_path):
     from pathlib import Path
 

@@ -583,6 +583,43 @@ def test_connected_components_raises_on_non_convergence(spark):
         connected_components(edges, nodes, max_iter=4)
 
 
+def test_connected_components_rejects_nonpositive_checkpoint_every(spark):
+    """A zero-round checkpoint block would compare the labels with
+    themselves, report convergence at once and return every node as
+    its own component — a bad parameter must raise instead."""
+    from spark_streaming_kafka2elasticsearch_spark.operators.dedup import (
+        connected_components,
+    )
+
+    edges = spark.createDataFrame([(0, 1), (1, 2)], ["id_a", "id_b"])
+    nodes = spark.createDataFrame([(i,) for i in range(3)], ["_id"])
+    for bad in (0, -1):
+        with pytest.raises(ValueError, match="checkpoint_every"):
+            connected_components(edges, nodes, checkpoint_every=bad)
+
+
+def test_maintain_gate_declines_rank_outside_int32(spark):
+    """The descent maintain kernels carry edge ranks in int32: a stored
+    rank ≥ 2^31 must send the operator to its Spark path, not wrap."""
+    from spark_streaming_kafka2elasticsearch_spark.operators.similarity import (
+        _maintain_gate_state,
+    )
+
+    base = spark.createDataFrame(
+        [(0, [1.0, 0.0], 1.0, 0), (1, [0.0, 1.0], 1.0, 0)],
+        "_id long, _v array<double>, _n double, _bucket int",
+    )
+
+    def edges(rank):
+        return spark.createDataFrame(
+            [(0, 1, rank), (1, 0, 1)], "src long, dst long, rank long"
+        )
+
+    st = _maintain_gate_state(base, 2, 2, edges(2))
+    assert st is not None and sorted(st["o_rank"].tolist()) == [1, 2]
+    assert _maintain_gate_state(base, 2, 2, edges(1 << 31)) is None
+
+
 def test_connected_components_star_matches_iterative(spark):
     """Property test: large-star/small-star and min-label propagation
     agree on random sparse graphs (components, labels, isolated

@@ -109,6 +109,63 @@ def test_upsert_replay_is_idempotent(spark, tmp_path):
     assert sorted((r["k"], r["v"]) for r in rows) == [("a", 1), ("b", 2)]
 
 
+def _crash_before_new_table_renamed_in(monkeypatch):
+    """Make the table swap fail at its crash window: the old table has
+    been moved aside, the new one is written but not yet renamed in."""
+    real_rename = os.rename
+
+    def rename(src, dst):
+        if "__tmp_" in os.path.basename(src):
+            raise OSError("simulated crash before the new table is renamed in")
+        real_rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", rename)
+
+
+def test_upsert_sink_replay_after_crash_between_renames_keeps_history(
+    spark, tmp_path, monkeypatch
+):
+    """A crash inside the table swap must not lose the table: the
+    replayed epoch still merges into the rows written before it."""
+    sink = KeyedUpsertParquetSink(str(tmp_path / "table"), key_col="k")
+    sink.write_batch(spark.createDataFrame([("a", 1), ("b", 2)], ["k", "v"]), 0)
+    b1 = spark.createDataFrame([("b", 20), ("c", 3)], ["k", "v"])
+    with monkeypatch.context() as m:
+        _crash_before_new_table_renamed_in(m)
+        with pytest.raises(OSError, match="simulated crash"):
+            sink.write_batch(b1, 1)
+    assert not os.path.exists(sink.path)  # the crash window
+    sink.write_batch(b1, 1)  # the replay
+    rows = sorted((r["k"], r["v"]) for r in sink.read(spark).collect())
+    assert rows == [("a", 1), ("b", 20), ("c", 3)]
+
+
+def test_fold_sink_replay_after_crash_between_renames_keeps_aggregate(
+    spark, tmp_path, monkeypatch
+):
+    """Same crash for an additive fold: the replayed epoch folds onto
+    the previous aggregate, not onto an empty table."""
+    from spark_streaming_kafka2elasticsearch_spark.streaming.sinks import (
+        IncrementalAggParquetSink,
+    )
+
+    sink = IncrementalAggParquetSink(
+        str(tmp_path / "mv"), keys=("k",), sum_cols=("v",)
+    )
+    sink.write_batch(spark.createDataFrame([("a", 1.0)], ["k", "v"]), 0)
+    b1 = spark.createDataFrame([("a", 2.0), ("b", 5.0)], ["k", "v"])
+    with monkeypatch.context() as m:
+        _crash_before_new_table_renamed_in(m)
+        with pytest.raises(OSError, match="simulated crash"):
+            sink.write_batch(b1, 1)
+    sink.write_batch(b1, 1)
+    got = {
+        r["k"]: (float(r["sum_v"]), r["n_rows"])
+        for r in sink.read(spark).collect()
+    }
+    assert got == {"a": (3.0, 2), "b": (5.0, 1)}
+
+
 def test_memory_sink_upsert(spark, tmp_path):
     sink = KeyedUpsertMemorySink(key_col="k")
     sink.write_batch(spark.createDataFrame([("a", 1)], ["k", "v"]), 0)
